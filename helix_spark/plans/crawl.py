@@ -42,9 +42,11 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -109,6 +111,16 @@ FRONTIER_COLS = [
 ]
 
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#]*)"
+
+# storage level of the wave loop's heavy localCheckpoints (admit rank,
+# verified batch, host-updates delta): PySpark's MEMORY_AND_DISK is the
+# SERIALIZED level, and with spark.rdd.compress=true (session.py default)
+# the blocks are lz4-compressed bytes instead of JVM object graphs. Paired
+# A/B on the 6M-URL scaling harness (BENCH/BASELINE.md round 5): ties the
+# deserialized level at local[4], beats it at local[16] (52.6/55.1 s vs
+# 59.0/67.0 s) — deserialized object graphs cost GC scan and memory
+# bandwidth, exactly what the 16-core legs are starved of.
+_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 @dataclass
@@ -181,13 +193,6 @@ class CrawlEngine:
             self.seeds_df = spark.createDataFrame(
                 [(s,) for s in sorted(set(self.seed_canon))], "__seed_key string"
             ).localCheckpoint()
-        # wave-loop heavy-checkpoint storage (config.wave_checkpoint_storage):
-        # resolved once to a StorageLevel, None = JVM default (deserialized)
-        self._ckpt_level = None
-        if cfg.wave_checkpoint_storage:
-            from pyspark.storagelevel import StorageLevel
-
-            self._ckpt_level = getattr(StorageLevel, cfg.wave_checkpoint_storage)
         self.bloom: PartitionedBloom | None = None
         # The big URL Column expressions cost ~0.3-0.4 s of py4j round-trips
         # EACH to construct, and a wave needs them every iteration. Column
@@ -220,11 +225,11 @@ class CrawlEngine:
         self._mins_cache: dict[int, int] | None = None
         self.aborted = False
         self.verbose = bool(os.environ.get("HELIX_SPARK_VERBOSE"))
-        # pipelined wave commit (cfg.pipelined_commit): the background tail
-        # (report/seen/metrics/bloom/host_state writes + the atomic commit)
-        # of the PREVIOUS wave, joined before the next admit touches
-        # seen/bloom/HEAD; the pending frontier manifest + host-updates
-        # delta checkpoint are what the next select reads instead
+        # pipelined wave commit: the background tail (report/seen/metrics/
+        # bloom/host_state writes + the atomic commit) of the PREVIOUS wave,
+        # joined before the next admit touches seen/bloom/HEAD; the pending
+        # frontier manifest + host-updates delta checkpoint are what the
+        # next select reads instead
         self._tail_future = None
         self._tail_frees: list = []
         self._pending_frontier_m: str | None = None
@@ -255,16 +260,13 @@ class CrawlEngine:
             self._pending_hs_delta = None
 
     def _compose_hs(self, committed):
-        """host_state view for the SELECT phase under pipelined commit:
-        committed table (HEAD — the previous wave's tail may not have
-        published yet) overlaid with the pending host-updates delta
-        checkpoint. Exact either way: if the tail already committed, the
+        """host_state view for the SELECT phase: committed table (HEAD —
+        the previous wave's tail may not have published yet) overlaid with
+        the pending host-updates delta checkpoint. Exact either way: if the tail already committed, the
         delta rows equal their committed selves and the anti-join+union is
         idempotent. The delta is replaced by an empty RDD-backed frame when
         none is pending so the select plan keeps ONE operator shape across
         waves (plan_review wave_plan_identity)."""
-        if not self.cfg.pipelined_commit:
-            return committed
         delta = self._pending_hs_delta
         if committed is None:
             return delta
@@ -288,7 +290,18 @@ class CrawlEngine:
         plan at EVERY stage boundary (measured via event-log gap analysis:
         seconds of zero-tasks-running driver time per wave, the dominant
         non-scaling fraction at N→4N). Restored on exit so the analytics
-        queries (which do want AQE) are unaffected."""
+        queries (which do want AQE) are unaffected.
+
+        The confs set here — ``spark.sql.adaptive.enabled``,
+        ``spark.sql.files.minPartitionNum``,
+        ``spark.sql.constraintPropagation.enabled`` and (per wave, via
+        _set_shuffle_fanout) ``spark.sql.shuffle.partitions`` — are
+        SESSION-WIDE, not scoped to the crawl's plans. A crawl must
+        therefore not share its SparkSession with concurrently running
+        queries (e.g. the analytics battery on another thread): they would
+        plan without AQE and with the crawl's partition counts. Run them
+        before or after the crawl, or on a separate session
+        (SparkSession.newSession() has its own SQL conf)."""
         conf = self.spark.conf
         prev = conf.get("spark.sql.adaptive.enabled", "true")
         prev_parts = conf.get("spark.sql.shuffle.partitions")
@@ -302,11 +315,10 @@ class CrawlEngine:
         # split per core keeps the scan (and the map side of the politeness
         # window) as wide as the cluster at any scale; it cannot split
         # below one file per task, so tiny reads are unaffected.
-        if not os.environ.get("HELIX_NO_SCAN_FLOOR"):  # A/B hook
-            conf.set(
-                "spark.sql.files.minPartitionNum",
-                str(self.spark.sparkContext.defaultParallelism),
-            )
+        conf.set(
+            "spark.sql.files.minPartitionNum",
+            str(self.spark.sparkContext.defaultParallelism),
+        )
         # Catalyst constraint propagation off for the wave loop: inferring
         # constraints over the admit tree (a regex-heavy canonicalization
         # forest re-analyzed EVERY wave) is pure driver time that grows with
@@ -317,8 +329,7 @@ class CrawlEngine:
         # unaffected by construction (an optimizer-only toggle). Restored on
         # exit — the analytics battery keeps the default.
         prev_cprop = conf.get("spark.sql.constraintPropagation.enabled", "true")
-        if not os.environ.get("HELIX_KEEP_CONSTRAINT_PROP"):  # A/B hook
-            conf.set("spark.sql.constraintPropagation.enabled", "false")
+        conf.set("spark.sql.constraintPropagation.enabled", "false")
         try:
             yield
         finally:
@@ -511,10 +522,9 @@ class CrawlEngine:
         """The PLAN-BUILD half of admission: enrichment → first-wins dedup →
         bloom/seen anti-join, returned as a LAZY DataFrame (no job). Split
         from ``_admit_finish`` so the wave loop can build this tree on the
-        driver WHILE the select checkpoint job runs on the cluster
-        (cfg.overlap_select_build) — everything here is independent of the
-        select stats; only the rank's bucket boundaries (and the job
-        submission itself) need them. Reads the seen table at HEAD, so the
+        driver WHILE the select checkpoint job runs on the cluster —
+        everything here is independent of the select stats; only the rank's
+        bucket boundaries (and the job submission itself) need them. Reads the seen table at HEAD, so the
         previous wave's commit tail must be joined first."""
         _t_en = time.time()
         cfg = self.cfg
@@ -654,7 +664,7 @@ class CrawlEngine:
             extra_metrics={"__ok": F.count_if(
                 (F.col("url_status") == 0) & ~F.col("robots_blocked")
             )},
-            storage_level=self._ckpt_level,
+            storage_level=_CKPT_LEVEL,
             counts_extra=counts_extra,
         )
         n_frontier = int(extras["__ok"] or 0)
@@ -884,91 +894,31 @@ class CrawlEngine:
 
     # ----------------------------------------------------------- bootstrap
     def bootstrap_frontier(self, urls: DataFrame) -> int:
-        with self._static_planner():
-            return self._bootstrap_frontier(urls)
-
-    def _bootstrap_frontier(self, urls: DataFrame) -> int:
         """Pre-populate the frontier from a DataFrame of absolute URLs
         (column ``url``) — the resumed-crawl-with-backlog scenario used for
-        frontier-throughput benchmarking at 10^x scale. URLs are admitted
-        through the full pipeline (canonicalize, robots, dedup, bloom) with
-        themselves as parents (internal, non-orphan). Returns admitted count.
+        frontier-throughput benchmarking at 10^x scale; follow it with
+        ``run(resume=True)``. URLs are admitted through the full pipeline
+        (canonicalize, robots, dedup, bloom + exact seen check) with
+        themselves as parents (internal, non-orphan). Onto an existing
+        warehouse, already-seen URLs are dropped and priorities continue
+        above every queued row (_admit_and_commit). Returns admitted count.
 
         Admission order is ``xxhash64(url)`` — deterministic across runs and
         cluster layouts (monotonically_increasing_id is partition-layout-
         dependent; see operators/rank.py), so two bootstrap+resume runs
         produce identical frontier priorities."""
-        items = urls.select(
-            F.col("url").alias("raw"),
-            F.col("url").alias("resolved"),
-            F.col("url").alias("parent_url"),
-            F.regexp_extract(F.col("url"), _HOST_RE, 1).alias("parent_host"),
-            F.lit(True).alias("is_extracted"),
-            F.lit(0).alias("status_pre"),
-            F.lit(None).cast("string").alias("ctype_pre"),
-            F.lit(None).cast("long").alias("size_pre"),
-            F.lit(True).alias("is_internal_admit"),
-            F.xxhash64(F.col("url")).alias("parent_priority"),
-            F.lit(0).cast("int").alias("seq"),
-        )
-        for f in ADMIT_SCHEMA.fields:
-            items = items.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        self._init_filters()
-        # bootstrap parent_priority is xxhash64(url) — uniform over int64,
-        # so the rank buckets come from the analytic grid (no data pass)
-        frontier, report, seen, counts, n_frontier = self.admit(
-            items, wave=0, boundaries=uniform_hash_boundaries(self._rank_buckets)
-        )
-        self._ingest_filters(seen)
-        self.counter += sum(counts.values())
-        self.live += n_frontier
-        # Register the bootstrapped hosts (cursor −1, eligible now) — the
-        # exact defaults the select join coalesces for an ABSENT host, so
-        # selection is unchanged. Without this the bootstrap was the one
-        # frontier producer violating the "host_state covers every frontier
-        # host" invariant the pipelined commit's incremental fresh-host
-        # count relies on: bootstrapped hosts are fetched before ever being
-        # 'fresh' (their first host_state row carries a real cursor), the
-        # count never sees them, n_hosts stays near 0, and at ≥
-        # cfg.host_state_lsm_min_hosts the LSM migration NEVER fires — an
-        # O(total hosts) host_state overwrite every wave plus a wrong input
-        # to the politeness broadcast-vs-shuffle decision (measured:
-        # scripts/lsm_bench.py at 120k hosts registered n_hosts=7, zero LSM
-        # buckets). The bootstrap commit's full-overwrite Observation sets
-        # n_hosts and the cursor-minima cache exactly.
-        new_hosts = None
-        hs = self.read_host_state()
-        if n_frontier > 0:
-            new_hosts = frontier.select("host").distinct().select(
-                "host",
-                F.lit(0).cast("long").alias("next_allowed_wave"),
-                F.lit(-1).cast("long").alias("cursor"),
+        with self._static_planner():
+            # parent_priority is xxhash64(url) — uniform over int64, so the
+            # rank buckets come from the analytic grid (no data pass)
+            _, n = self._admit_and_commit(
+                self._url_items(urls), -1,
+                uniform_hash_boundaries(self._rank_buckets),
             )
-            if hs is not None:
-                # bootstrap onto an existing warehouse: same composition as
-                # _enqueue_urls — keep registered hosts, add genuinely-new
-                # ones (and make the cursor cache exact before any LSM merge)
-                if self.wh.num_buckets("host_state"):
-                    self._cursor_mins(hs)
-                new_hosts = new_hosts.join(
-                    self.read_host_state(resolve=False).select("host"),
-                    on="host", how="left_anti",
-                )
-                hs = hs.unionByName(new_hosts)
-            else:
-                hs = new_hosts
-        self._commit_wave(-1, frontier, report, seen, hs, 0, counts,
-                          n_frontier=n_frontier, host_updates=new_hosts)
-        free_local_checkpoint(frontier)  # committed to parquet; blocks dead
         # seed the first wave's join-strategy estimate from the backlog size
-        self._est_candidates = max(sum(counts.values()), 1) * 4
-        return sum(counts.values())
+        self._est_candidates = max(n, 1) * 4
+        return n
 
     def enqueue_urls(self, urls: DataFrame) -> int:
-        with self._static_planner():
-            return self._enqueue_urls(urls)
-
-    def _enqueue_urls(self, urls: DataFrame) -> int:
         """Mid-crawl URL feed ingestion — a crawl discovers its input over
         time (new seed lists, sitemap drops, a readStream of URLs via
         foreachBatch: streaming/events.seed_feed_query). URLs pass the FULL
@@ -978,15 +928,17 @@ class CrawlEngine:
         everything queued (the global counter only grows, preserving the
         cursor model's prefix property). One atomic snapshot per call; safe
         between run() calls and across resume. Returns admitted count."""
-        self._wait_tail()  # defensive: run() always joins its tail on exit
-        head = self.wh.head_commit()
-        if head and self.counter == 0:
-            # engine constructed fresh against an existing warehouse
-            self.counter = head["metrics"].get("counter", 0)
-            self.live = head["metrics"].get("live", 0)
-        if self.bloom is None:
-            self._load_filters()
-        wave = (head["wave"] + 1) if head else 0
+        with self._static_planner():
+            _, n = self._admit_and_commit(
+                self._url_items(urls), 0,
+                uniform_hash_boundaries(self._rank_buckets),
+            )
+        return n
+
+    @staticmethod
+    def _url_items(urls: DataFrame) -> DataFrame:
+        """Admission items for absolute URLs (column ``url``): each URL is
+        its own parent — internal, non-orphan — ranked by xxhash64(url)."""
         items = urls.select(
             F.col("url").alias("raw"),
             F.col("url").alias("resolved"),
@@ -1002,45 +954,81 @@ class CrawlEngine:
         )
         for f in ADMIT_SCHEMA.fields:
             items = items.withColumn(f.name, F.col(f.name).cast(f.dataType))
+        return items
+
+    def _load_head(self) -> dict | None:
+        """Driver state from the warehouse HEAD — the exact counters the
+        last commit persisted and the bloom filter it linked; the cursor-
+        minima cache is dropped so its next use recomputes it exactly. On
+        an empty warehouse this is the initial state. → HEAD commit | None"""
+        head = self.wh.head_commit()
+        metrics = head["metrics"] if head else {}
+        self.counter = metrics.get("counter", 0)
+        self.live = metrics.get("live", 0)
+        self.n_hosts = metrics.get("n_hosts", 0)
+        self._mins_cache = None
+        self._load_filters()
+        return head
+
+    def _admit_and_commit(self, items: DataFrame, wave: int,
+                          boundaries: list[int] | None = None) -> tuple[int, int]:
+        """The one admission route for URLs no fetched page produced — the
+        seed list, a bootstrap backlog, a URL feed (Helix sends every
+        resource through one routine, CoordinatorBlock.PreprocessNewResources
+        in Bot/Block/CoordinatorBlock.cs:235-264):
+
+        1. counter/live/n_hosts and the bloom come from HEAD, exactly as on
+           resume — priorities continue above every queued row, and every
+           seen key is bloom-positive, so none skips the exact seen check;
+        2. admit (its rows are stamped with the first wave that can fetch
+           them, like the wave loop's admissions);
+        3. the admitted rows' genuinely-new hosts are registered (cursor −1,
+           eligible now — the defaults the select join coalesces for an
+           ABSENT host, so selection is unchanged) by anti-join against
+           host_state, keeping "host_state covers every frontier host";
+        4. the wave loop's commit — _commit_critical_path, then _commit_wave
+           with the bloom ingest in its pool — run synchronously: the
+           snapshot is published before this returns.
+
+        ``wave`` is the commit wave on an EMPTY warehouse; onto an existing
+        one the commit lands at HEAD's wave + 1, so waves stay monotone.
+        → (commit wave, admitted rows)"""
+        self._wait_tail()  # defensive: run() always joins its tail on exit
+        head = self._load_head()
+        if head:
+            wave = head["wave"] + 1
         frontier, report, seen, counts, n_frontier = self.admit(
-            items, wave, boundaries=uniform_hash_boundaries(self._rank_buckets)
+            items, wave + 1, boundaries=boundaries
         )
-        self._ingest_filters(seen)
-        self.counter += sum(counts.values())
+        admitted = sum(counts.values())
+        self.counter += admitted
         self.live += n_frontier
-        # register the new hosts so cursor-based range pruning stays exact
-        hs = self.read_host_state()
-        # The commit below MERGES per-bucket cursor minima from the CHANGED
-        # rows into self._mins_cache (plans/crawl._update_host_stats). On a
-        # fresh engine over an existing LSM host_state the cache is None, and
-        # merging into an empty cache would seed a PARTIAL cache whose
-        # entries come from changed rows only — the next wave's merge could
-        # then assign a bucket a minimum ABOVE the true min of an unchanged
-        # laggard host in that bucket, and range pruning would drop frontier
-        # leaves that still hold its live rows (silent URL loss). Make the
-        # cache exact FIRST: _cursor_mins recomputes it from the full table
-        # when (and only when) it is None.
-        if hs is not None and self.wh.num_buckets("host_state"):
-            self._cursor_mins(hs)
         new_hosts = None
-        if hs is not None:
-            new_hosts = (
-                frontier.select("host").distinct()
-                .join(
-                    self.read_host_state(resolve=False).select("host"),
-                    on="host", how="left_anti",
+        if n_frontier > 0:
+            new_hosts = frontier.select("host").distinct()
+            registered = self.read_host_state(resolve=False)
+            if registered is not None:
+                new_hosts = new_hosts.join(
+                    registered.select("host"), on="host", how="left_anti"
                 )
-                .select(
-                    "host",
-                    F.lit(0).cast("long").alias("next_allowed_wave"),
-                    F.lit(-1).cast("long").alias("cursor"),
-                )
+            new_hosts = new_hosts.select(
+                "host",
+                F.lit(0).cast("long").alias("next_allowed_wave"),
+                F.lit(-1).cast("long").alias("cursor"),
             )
-            hs = hs.unionByName(new_hosts)
-        self._commit_wave(wave, frontier, report, seen, hs, 0, counts,
-                          n_frontier=n_frontier, host_updates=new_hosts)
+        frontier_m, new_hosts = self._commit_critical_path(
+            frontier, n_frontier, new_hosts
+        )
+        self._commit_wave(
+            wave, report, seen, 0, counts,
+            frontier_manifest=frontier_m, host_updates=new_hosts,
+            filters_prep=lambda: self._ingest_filters(seen),
+        )
+        # committed to parquet; the checkpoint blocks are dead
         free_local_checkpoint(frontier)
-        return sum(counts.values())
+        if new_hosts is not None:
+            free_local_checkpoint(new_hosts)
+        return wave, admitted
 
     # ------------------------------------------------------------- wave body
     def run(self, resume: bool = False) -> CrawlOutcome:
@@ -1064,15 +1052,11 @@ class CrawlEngine:
 
     def _run(self, resume: bool = False) -> CrawlOutcome:
         cfg, wh, spark = self.cfg, self.wh, self.spark
-        head = wh.head_commit() if resume else None
+        head = self._load_head() if resume else None
         if head:
             start_wave = head["wave"] + 1
-            self.counter = head["metrics"].get("counter", 0)
-            self.live = head["metrics"].get("live", 0)
-            self.n_hosts = head["metrics"].get("n_hosts", 0)
-            self._load_filters()
         else:
-            self._init_filters()
+            # seed list: one bucket (no boundaries), seed order = seq
             seeds = spark.createDataFrame(
                 [
                     (s, s, None, None, True, 0, None, None, True, 0, i)
@@ -1080,27 +1064,7 @@ class CrawlEngine:
                 ],
                 ADMIT_SCHEMA,
             )
-            frontier, report, seen, counts, n_frontier = self.admit(seeds, wave=0)
-            self._ingest_filters(seen)
-            self.counter += sum(counts.values())
-            self.live += n_frontier
-            # register the seed hosts (cursor −1, eligible now) — exactly
-            # the defaults the select join coalesces for an ABSENT host, so
-            # selection is unchanged; it closes the one gap in the "host_
-            # state covers every frontier host" invariant (the enqueue path
-            # already registers), which the pipelined commit's incremental
-            # fresh-host counting relies on for an exact n_hosts.
-            seed_hosts = None
-            if n_frontier > 0:
-                seed_hosts = frontier.select("host").distinct().select(
-                    "host",
-                    F.lit(0).cast("long").alias("next_allowed_wave"),
-                    F.lit(-1).cast("long").alias("cursor"),
-                )
-            self._commit_wave(-1, frontier, report, seen, seed_hosts, 0, counts,
-                              n_frontier=n_frontier, host_updates=seed_hosts)
-            free_local_checkpoint(frontier)
-            start_wave = 0
+            start_wave = self._admit_and_commit(seeds, -1)[0] + 1
 
         total_fetched = 0
         wave = start_wave
@@ -1116,11 +1080,11 @@ class CrawlEngine:
             if self.live <= 0:  # exact driver-side counter — no frontier scan
                 break
             t0_sv = time.time()
-            # pipelined commit: the previous wave's tail may not have
-            # published yet — read the frontier through the pending
-            # manifest (written on that wave's critical path) and overlay
-            # host_state with the pending delta checkpoint; both reads are
-            # exact whether or not the tail has since committed
+            # the previous wave's commit tail may not have published yet —
+            # read the frontier through the pending manifest (written on
+            # that wave's critical path) and overlay host_state with the
+            # pending delta checkpoint; both reads are exact whether or not
+            # the tail has since committed
             pend_f = self._pending_frontier_m
             host_state = self._compose_hs(self.read_host_state())
             mins = self._cursor_mins(host_state)
@@ -1172,9 +1136,9 @@ class CrawlEngine:
             # ONE materialization for select+verify (round 2 paid two). The
             # wave stats (batch count, seed redirects, avg load, rank-bucket
             # boundary quantiles) ride ONE tiny agg job over the checkpointed
-            # batch. Under cfg.overlap_select_build the checkpoint is LAZY
-            # and that agg — submitted from a background thread — IS the
-            # materializing action, so the driver builds the entire admit
+            # batch. The checkpoint is LAZY and that agg — submitted from a
+            # background thread — IS the materializing action, so the
+            # driver builds the entire admit
             # tree (admissions → enrichment → first-wins dedup → seen
             # anti-join) WHILE the cluster runs the select job (guide §2.6:
             # overlap independent work; the build was the wave's only
@@ -1205,28 +1169,17 @@ class CrawlEngine:
                     "select:" + verified._jdf.queryExecution().executedPlan().toString()
                 )
             t_drv = time.time() - t0_sv
-            overlap = cfg.overlap_select_build
-            stats_fut = None
-            if overlap:
-                verified = verified.localCheckpoint(False, self._ckpt_level)
-                from concurrent.futures import ThreadPoolExecutor
-
-                _vck = verified
-                spool = ThreadPoolExecutor(max_workers=1)
-                stats_fut = spool.submit(
-                    lambda: _vck.agg(*stat_cols).collect()[0]
-                )
-                spool.shutdown(wait=False)
-            else:
-                # synchronous order (A/B leg): eager checkpoint job now, the
-                # stats agg runs after the driver build over cached blocks
-                verified = verified.localCheckpoint(True, self._ckpt_level)
+            verified = verified.localCheckpoint(False, _CKPT_LEVEL)
+            _vck = verified
+            spool = ThreadPoolExecutor(max_workers=1)
+            stats_fut = spool.submit(lambda: _vck.agg(*stat_cols).collect()[0])
+            spool.shutdown(wait=False)
             batch = verified  # every batch column survives verify_batch
             # previous wave's tail: join it BEFORE anything reads HEAD (the
             # admit tree build below embeds the seen table at HEAD, and the
-            # early-commit appends chain from HEAD manifests). Under overlap
-            # the select job may still be running — the tail's jobs were
-            # overlapped with it anyway, and nothing the tail frees is an
+            # early-commit appends chain from HEAD manifests). The select
+            # job may still be running — the tail's jobs were overlapped
+            # with it anyway, and nothing the tail frees is an
             # input of the running job (the select reads the pending
             # frontier manifest from parquet and the still-pending hs delta,
             # which _wait_tail defers to the NEXT tail's frees).
@@ -1265,9 +1218,9 @@ class CrawlEngine:
                 )
             # join-strategy estimate = prev wave's observed candidates ×4,
             # CLAMPED from below by a driver-known UPPER BOUND on this
-            # wave's batch count (the exact count is still in flight under
-            # overlap) × the max out-degree ever observed (×2 headroom): a
-            # batch-size spike — the common way "prev wave ×4"
+            # wave's batch count (the exact count is still in flight: the
+            # stats agg runs under this build) × the max out-degree ever
+            # observed (×2 headroom): a batch-size spike — the common way "prev wave ×4"
             # underestimates — can never route an over-limit candidate set
             # into the broadcast-semi path (driver OOM risk, round-3
             # ADVICE). batch ≤ live rows and ≤ one budget per registered
@@ -1285,10 +1238,7 @@ class CrawlEngine:
             fresh = self._admit_prepare(admissions, est_candidates=est)
             nb_hs_read = wh.num_buckets("host_state")
             _t_sj = time.time()
-            if stats_fut is not None:
-                stats = stats_fut.result().asDict()
-            else:
-                stats = verified.agg(*stat_cols).collect()[0].asDict()
+            stats = stats_fut.result().asDict()
             if self.verbose:
                 print(
                     f"[helix-spark]     select driver={t_drv:.1f}s "
@@ -1324,7 +1274,7 @@ class CrawlEngine:
                 mlog = wh.append("crawl_log", log_rows)
                 wh.commit(wave, {"crawl_log": mlog},
                           metrics={"counter": self.counter, "live": self.live,
-                                   "aborted": True})
+                                   "n_hosts": self.n_hosts, "aborted": True})
                 return CrawlOutcome(wave + 1, True, total_fetched)
 
             # EARLY commit half: the crawl-log append and the SETTLED halves
@@ -1349,8 +1299,6 @@ class CrawlEngine:
                 and self.spark.sparkContext.defaultParallelism
                 >= cfg.early_commit_min_parallelism
             ):
-                from concurrent.futures import ThreadPoolExecutor
-
                 obs_settled = Observation()
                 wave_report_settled = report_rows.withColumn(
                     "wave", F.lit(wave)
@@ -1396,7 +1344,7 @@ class CrawlEngine:
             self.live += n_frontier - batch_count
 
             # changed host rows only (fetched + genuinely new). The full
-            # next state is composed lazily and is ONLY evaluated by the
+            # next state is composed (lazily, in _commit_wave) ONLY for the
             # small-scale overwrite / one-time LSM-migration write paths —
             # steady-state LSM appends just hs_updates (O(batch hosts)).
             # The already-registered anti-join only needs host_state rows
@@ -1408,86 +1356,24 @@ class CrawlEngine:
             # politeness docstring promises). The bucket ids RIDE the admit
             # rank's per-bucket counts job (_admit_finish host_bucket_mod) —
             # no separate distinct job on the commit critical path.
-            hs_anti_src = None
-            if nb_hs_read:
-                hs_anti_src = self.read_host_state(
-                    buckets=new_hbs, resolve=False
-                )
-            else:
-                hs_anti_src = self.read_host_state(resolve=False)
+            # (new_hbs is None outside the LSM regime: an unpruned read)
             hs_updates = host_state_updates(
                 batch, self.robots, wave,
-                hs_anti_src,
+                self.read_host_state(buckets=new_hbs, resolve=False),
                 new_hosts=new_frontier,
             )
-            pipelined = cfg.pipelined_commit
+            # CRITICAL PATH: the frontier append and the host-updates
+            # checkpoint the next select reads (through the pending
+            # manifest/delta overrides); everything else commits in the
+            # background tail, overlapped with the next wave's select
             prev_delta, self._delta_to_free = self._delta_to_free, None
-            frontier_manifest = None
-            if pipelined:
-                # CRITICAL PATH of the pipelined commit — only what the
-                # NEXT wave's select depends on: the frontier append (run
-                # concurrently) and the host-updates checkpoint, whose
-                # Observation carries the per-bucket cursor minima + the
-                # fresh-host count so the driver stats are current before
-                # the tail even starts. Everything else commits in the
-                # background tail, overlapped with the next select.
-                from concurrent.futures import ThreadPoolExecutor
-
-                crit = ThreadPoolExecutor(max_workers=1)
-                fut_frontier = None
-                if n_frontier > 0:
-                    fut_frontier = crit.submit(
-                        wh.append_ranged, "frontier",
-                        new_frontier.select(FRONTIER_COLS), "priority",
-                        cfg.frontier_range_bits, "host",
-                        cfg.frontier_host_buckets,
-                    )
-                obs_hs = Observation()
-                nb = self._frontier_nb()
-                hb = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
-                hs_updates = hs_updates.observe(
-                    obs_hs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_if(
-                        (F.col("next_allowed_wave") == 0) & (F.col("cursor") == -1)
-                    ).alias("fresh"),
-                    *[
-                        F.min(F.when(hb == i, F.col("cursor"))).alias(f"m{i}")
-                        for i in range(nb)
-                    ],
-                ).localCheckpoint(True, self._ckpt_level)
-                got = observed_metrics(obs_hs)
-                # incremental host count: fresh rows are the only inserts
-                # (fetched hosts are pre-registered by the frontier
-                # invariant); minima MERGE keeps the cache a safe lower
-                # bound in both write regimes — the compaction cadence
-                # refreshes it exactly
-                self.n_hosts += int(got.get("fresh") or 0)
-                cache = dict(self._mins_cache or {})
-                for i in range(nb):
-                    m = got.get(f"m{i}")
-                    if m is not None:
-                        cache[i] = min(cache[i], m) if i in cache else m
-                self._mins_cache = cache
-                if fut_frontier is not None:
-                    frontier_manifest = fut_frontier.result()
-                crit.shutdown(wait=True)
-                self._pending_frontier_m = frontier_manifest
-                self._pending_hs_delta = hs_updates
-            # the composition base must be the COMMITTED table (the tail of
-            # the previous wave has been joined above, so HEAD is current —
-            # the select-phase `host_state` view may carry the pending
-            # delta overlay and must not be the base here)
-            hs_base = self.read_host_state()
-            if hs_base is not None:
-                hs = hs_base.join(
-                    hs_updates.select("host"), on="host", how="left_anti"
-                ).unionByName(hs_updates)
-            else:
-                hs = hs_updates
-            # bloom maintenance is independent of the table writes — run it
-            # in the commit pool; with the early split, report/seen carry
-            # only the ADMIT halves (settled halves already written)
+            frontier_manifest, hs_updates = self._commit_critical_path(
+                new_frontier, n_frontier, hs_updates
+            )
+            self._pending_frontier_m = frontier_manifest
+            self._pending_hs_delta = hs_updates
+            # with the early split, report/seen carry only the ADMIT halves
+            # (settled halves already written)
             if early is not None:
                 commit_report, commit_seen = admit_report, admit_seen
                 extra_jobs = None
@@ -1495,38 +1381,23 @@ class CrawlEngine:
                 commit_report = report_rows.unionByName(admit_report)
                 commit_seen = seen_updates.unionByName(admit_seen)
                 extra_jobs = {"crawl_log": lambda: wh.append("crawl_log", log_rows)}
-            if pipelined:
-                from concurrent.futures import ThreadPoolExecutor
-
-                tail = ThreadPoolExecutor(max_workers=1)
-                self._tail_frees = [verified, new_frontier] + (
-                    [prev_delta] if prev_delta is not None else []
-                )
-                self._tail_future = tail.submit(
-                    self._commit_wave,
-                    wave, None, commit_report, commit_seen, hs, batch_count,
-                    counts,
-                    n_frontier=n_frontier,
-                    avg_load_ms=stats.get("avg_load_ms"),
-                    extra_jobs=extra_jobs,
-                    filters_prep=lambda: self._ingest_filters(admit_seen),
-                    early=early,
-                    host_updates=hs_updates,
-                    frontier_manifest=frontier_manifest,
-                    hs_prestats=True,
-                )
-                tail.shutdown(wait=False)
-            else:
-                self._commit_wave(
-                    wave, new_frontier, commit_report, commit_seen, hs,
-                    batch_count, counts,
-                    n_frontier=n_frontier,
-                    avg_load_ms=stats.get("avg_load_ms"),
-                    extra_jobs=extra_jobs,
-                    filters_prep=lambda: self._ingest_filters(admit_seen),
-                    early=early,
-                    host_updates=hs_updates,
-                )
+            tail = ThreadPoolExecutor(max_workers=1)
+            self._tail_frees = [verified, new_frontier] + (
+                [prev_delta] if prev_delta is not None else []
+            )
+            self._tail_future = tail.submit(
+                self._commit_wave,
+                wave, commit_report, commit_seen, batch_count, counts,
+                frontier_manifest=frontier_manifest,
+                host_updates=hs_updates,
+                avg_load_ms=stats.get("avg_load_ms"),
+                extra_jobs=extra_jobs,
+                # bloom maintenance is independent of the table writes —
+                # it runs in the commit pool
+                filters_prep=lambda: self._ingest_filters(admit_seen),
+                early=early,
+            )
+            tail.shutdown(wait=False)
             _mark("commit")
             if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
                 # periodic LSM compaction; its own atomic commit. It reads
@@ -1534,10 +1405,10 @@ class CrawlEngine:
                 # published this wave first (a compaction wave forfeits the
                 # overlap — 1 in compact_every waves).
                 self._wait_tail()
-                # the pipelined merge rule keeps the minima cache a safe
-                # LOWER bound in the flat-overwrite regime too (it can no
-                # longer rise with the full-table Observation) — recompute
-                # exactly here so frontier pruning stays tight
+                # the merge rule (_commit_critical_path) keeps the minima
+                # cache a safe LOWER bound that never rises, in the flat-
+                # overwrite regime too — recompute exactly here so frontier
+                # pruning stays tight
                 if not wh.num_buckets("host_state"):
                     self._mins_cache = None
                 cm = {}
@@ -1580,14 +1451,10 @@ class CrawlEngine:
                                                  "live": self.live,
                                                  "n_hosts": self.n_hosts,
                                                  "compaction": True})
-            # wave committed (or committing in the tail): the two wave
-            # checkpoints (select+verify batch, ranked admissions) die with
-            # the commit — freed here in the synchronous order, or by
-            # _wait_tail once the tail's writes are done reading them
-            # (block-manager hygiene; see free_local_checkpoint)
-            if not pipelined:
-                free_local_checkpoint(verified)
-                free_local_checkpoint(new_frontier)
+            # the two wave checkpoints (select+verify batch, ranked
+            # admissions) die with the commit: _wait_tail frees them once
+            # the tail's writes are done reading them (block-manager
+            # hygiene; see free_local_checkpoint)
             if self.verbose:
                 print(
                     f"[helix-spark] wave {wave}: batch={batch_count} "
@@ -1709,15 +1576,82 @@ class CrawlEngine:
             F.count_if(F.abs(F.col("status_code")) >= 400).alias("broken"),
         ]
 
-    def _commit_wave(self, wave, frontier, report, seen, host_state, batch_count,
-                     partition_counts=None, extra_manifests: dict | None = None,
-                     n_frontier: int | None = None,
+    def _commit_critical_path(self, frontier: DataFrame, n_frontier: int,
+                              host_updates: DataFrame | None):
+        """The CRITICAL PATH of every commit — only what the next select
+        reads: the frontier append (run concurrently) and the host-updates
+        checkpoint, whose Observation carries the fresh-host count and the
+        per-bucket cursor minima. They MERGE into ``n_hosts`` and the
+        cursor-minima cache — the one host-stats rule: fresh rows are the
+        only inserts (fetched hosts are pre-registered by the frontier
+        invariant), and min() keeps the cache a safe lower bound that
+        cannot rise when a bucket's min host advances, so the compaction
+        cadence refreshes it exactly. The driver stats are current before
+        the rest of the commit (_commit_wave) even starts.
+
+        → (frontier manifest | None, checkpointed host updates | None)"""
+        wh, cfg = self.wh, self.cfg
+        crit = ThreadPoolExecutor(max_workers=1)
+        try:
+            fut_frontier = None
+            if n_frontier > 0:
+                # append-only ranged LSM: O(new rows); consumed rows are
+                # encoded by host_state cursors, fully-dead ranges pruned at
+                # compaction
+                fut_frontier = crit.submit(
+                    wh.append_ranged, "frontier", frontier.select(FRONTIER_COLS),
+                    "priority", cfg.frontier_range_bits, "host",
+                    cfg.frontier_host_buckets,
+                )
+            if host_updates is not None:
+                # merging changed rows into a MISSING cache would seed it
+                # from those rows alone — a bucket minimum above an unchanged
+                # laggard host's cursor, and range pruning would then drop
+                # frontier leaves that still hold its live rows. Make the
+                # cache exact first (a no-op while host_state is empty).
+                if self._mins_cache is None:
+                    self._cursor_mins(self.read_host_state())
+                obs_hs = Observation()
+                nb = self._frontier_nb()
+                hb = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
+                host_updates = host_updates.observe(
+                    obs_hs,
+                    F.count_if(
+                        (F.col("next_allowed_wave") == 0) & (F.col("cursor") == -1)
+                    ).alias("fresh"),
+                    *[
+                        F.min(F.when(hb == i, F.col("cursor"))).alias(f"m{i}")
+                        for i in range(nb)
+                    ],
+                ).localCheckpoint(True, _CKPT_LEVEL)
+                got = observed_metrics(obs_hs)
+                self.n_hosts += int(got.get("fresh") or 0)
+                cache = dict(self._mins_cache or {})
+                for i in range(nb):
+                    m = got.get(f"m{i}")
+                    if m is not None:
+                        cache[i] = min(cache[i], m) if i in cache else m
+                self._mins_cache = cache
+            manifest = fut_frontier.result() if fut_frontier is not None else None
+        finally:
+            crit.shutdown(wait=True)
+        return manifest, host_updates
+
+    def _commit_wave(self, wave, report, seen, batch_count, partition_counts,
+                     frontier_manifest: str | None,
+                     host_updates: DataFrame | None,
                      avg_load_ms: float | None = None,
                      extra_jobs: dict | None = None,
-                     filters_prep=None, early: dict | None = None,
-                     host_updates=None, frontier_manifest: str | None = None,
-                     hs_prestats: bool = False) -> None:
-        """``extra_jobs``: {table: thunk → manifest} to run in the commit
+                     filters_prep=None, early: dict | None = None) -> None:
+        """The rest of a commit after _commit_critical_path:
+        ``frontier_manifest`` links the ALREADY-WRITTEN frontier append and
+        ``host_updates`` is the checkpointed changed-host rows whose stats
+        are already merged into the driver state. Writes report, seen,
+        metrics, host_state and the bloom, then the atomic HEAD commit —
+        in the wave loop as the background tail, at the entry points
+        synchronously.
+
+        ``extra_jobs``: {table: thunk → manifest} to run in the commit
         pool alongside the table writes. ``filters_prep``: thunk run in the
         pool BEFORE _save_filters on the same pool task (bloom ingest must
         complete before its serialization — sequential within the task,
@@ -1726,17 +1660,9 @@ class CrawlEngine:
         pre-resolved table futures in 'manifests', the settled report
         write's Observation in 'obs_report' for the metrics sum, and the
         owning 'pool'); when present, ``report``/``seen`` carry ONLY the
-        admit halves and chain onto the early manifests.
-
-        Pipelined-commit mode (plans/crawl._run steady wave):
-        ``frontier_manifest`` links an ALREADY-WRITTEN frontier append
-        (done on the wave's critical path so the next select can read it)
-        instead of submitting the job here; ``hs_prestats`` marks that the
-        cursor-minima/fresh-host Observation already rode the
-        ``host_updates`` checkpoint and the driver stats are current — the
-        host_state write runs bare and ``jobs_after`` is skipped."""
+        admit halves and chain onto the early manifests."""
         wh, cfg = self.wh, self.cfg
-        manifests = dict(extra_manifests or {})
+        manifests = {}
         if frontier_manifest is not None:
             manifests["frontier"] = frontier_manifest
         # The table writes below are independent jobs over already-
@@ -1745,8 +1671,6 @@ class CrawlEngine:
         # between jobs; measured as the commit phase anti-scaling at 32
         # threads). Each writes its own table dir + manifest file, no shared
         # state; the atomic commit happens once, after all complete.
-        from concurrent.futures import ThreadPoolExecutor
-
         jobs: dict[str, object] = {}
         # headroom over the task count: the metrics task BLOCKS on the report
         # task's future, so the pool must never be saturated by waiters
@@ -1768,14 +1692,6 @@ class CrawlEngine:
                 return fut
 
             pool.submit = _timed_submit
-        if frontier_manifest is None and (n_frontier is None or n_frontier > 0):
-            # append-only ranged LSM: O(new rows); consumed rows are encoded
-            # by host_state cursors, fully-dead ranges pruned at compaction
-            jobs["frontier"] = pool.submit(
-                wh.append_ranged, "frontier", frontier.select(FRONTIER_COLS),
-                "priority", cfg.frontier_range_bits, "host",
-                cfg.frontier_host_buckets,
-            )
         # seen/report are LSM append-only (O(new rows) per wave, bucket-pruned
         # reads): hash-uniform updates would touch every bucket of a
         # copy-on-write merge, degenerating to an O(table) rewrite per wave.
@@ -1815,89 +1731,35 @@ class CrawlEngine:
             jobs["seen"] = pool.submit(
                 wh.append_bucketed, "seen", seen, "key", cfg.seen_buckets
             )
-        if host_state is not None:
-            obs_hosts = Observation()
-            nb = self._frontier_nb()
-            hb = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
-            min_cols = [
-                F.min(F.when(hb == i, F.col("cursor"))).alias(f"m{i}")
-                for i in range(nb)
-            ] if not hs_prestats else []
-            hs_bucketed = wh.num_buckets("host_state") > 0
-            # LSM once past the threshold (and permanently once the table is
-            # bucketed): per-wave write is O(changed hosts), not O(all
-            # hosts). A full overwrite at 10^8-10^9 hosts would be the one
-            # remaining O(state)-per-wave write in an otherwise LSM design.
-            lsm = hs_bucketed or (
-                host_updates is not None
-                and self.n_hosts > cfg.host_state_lsm_min_hosts
-            )
-            if lsm and hs_bucketed and host_updates is not None:
-                # steady state: append ONLY the changed rows; the per-bucket
-                # cursor minima + fresh-host count ride the tiny write
-                # (unless they already rode the critical-path checkpoint —
-                # hs_prestats — in which case the write runs bare)
-                upd = host_updates.withColumn("wave", F.lit(wave))
-                if not hs_prestats:
-                    upd = upd.observe(
-                        obs_hosts,
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(
-                            (F.col("next_allowed_wave") == 0) & (F.col("cursor") == -1)
-                        ).alias("fresh"),
-                        *min_cols,
-                    )
-                nb_hs = wh.num_buckets("host_state")
+        if host_updates is not None:
+            nb_hs = wh.num_buckets("host_state")
+            if nb_hs:
+                # LSM steady state: append ONLY the changed rows — O(changed
+                # hosts), not O(all hosts); a full overwrite at 10^8-10^9
+                # hosts would be the one remaining O(state)-per-wave write
+                # in an otherwise LSM design
                 jobs["host_state"] = pool.submit(
-                    wh.append_bucketed, "host_state", upd, "host", nb_hs
+                    wh.append_bucketed, "host_state",
+                    host_updates.withColumn("wave", F.lit(wave)), "host", nb_hs,
                 )
-                hs_mode = "lsm"
             else:
-                # small-scale overwrite, or the ONE-TIME O(table) migration
-                # into the bucketed LSM layout at the threshold crossing
+                # small-scale overwrite of HEAD's table merged with the
+                # changed rows, or — once n_hosts passes the threshold — the
+                # ONE-TIME O(table) migration into the bucketed LSM layout
                 # (bucket modulus = the frontier's, so host-bucket pruning
                 # aligns across the two tables)
-                full = host_state if hs_prestats else host_state.observe(
-                    obs_hosts, F.count(F.lit(1)).alias("n"), *min_cols
-                )
-                if lsm:
+                base = self.read_host_state()
+                full = host_updates if base is None else base.join(
+                    host_updates.select("host"), on="host", how="left_anti"
+                ).unionByName(host_updates)
+                if self.n_hosts > cfg.host_state_lsm_min_hosts:
                     jobs["host_state"] = pool.submit(
                         wh.overwrite_bucketed, "host_state",
-                        full.withColumn("wave", F.lit(wave)), "host", nb,
+                        full.withColumn("wave", F.lit(wave)), "host",
+                        self._frontier_nb(),
                     )
                 else:
                     jobs["host_state"] = pool.submit(wh.overwrite, "host_state", full)
-                hs_mode = "full"
-
-            def _update_host_stats():
-                jobs["host_state"].result()
-                got = observed_metrics(obs_hosts)
-                if hs_mode == "lsm":
-                    # the write saw CHANGED rows only: count inserts exactly
-                    # (fresh rows are the only inserts — fetched hosts are
-                    # always pre-registered by the frontier invariant) and
-                    # MERGE the changed buckets' minima into the cache.
-                    # min() keeps the cache a safe lower bound; it cannot
-                    # rise when the previous min host advances, so the
-                    # compaction cadence refreshes it exactly.
-                    self.n_hosts += int(got.get("fresh") or 0)
-                    cache = dict(self._mins_cache or {})
-                    for i in range(nb):
-                        m = got.get(f"m{i}")
-                        if m is not None:
-                            cache[i] = min(cache[i], m) if i in cache else m
-                    self._mins_cache = cache
-                else:
-                    self.n_hosts = int(got.get("n") or 0)
-                    self._mins_cache = {
-                        i: got[f"m{i}"]
-                        for i in range(nb)
-                        if got.get(f"m{i}") is not None
-                    }
-
-            jobs_after = None if hs_prestats else _update_host_stats
-        else:
-            jobs_after = None
 
         def _metrics_row():
             # waits for the report write(s), then sums their observations —
@@ -1943,8 +1805,6 @@ class CrawlEngine:
             pool.shutdown(wait=True)
             if early is not None:
                 early["pool"].shutdown(wait=True)
-        if jobs_after is not None:
-            jobs_after()
         if self.verbose:
             print(f"[helix-spark]     commit jobs: {durations}", flush=True)
         wh.commit(

@@ -63,8 +63,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # lz4 on serialized cached blocks: only SERIALIZED storage levels
-        # are affected (the wave loop's heavy checkpoints, config.py
-        # wave_checkpoint_storage default); deserialized caches ignore it.
+        # are affected (the wave loop's heavy checkpoints, plans/crawl.py
+        # _CKPT_LEVEL); deserialized caches ignore it.
         # Paired A/B on the 6M-URL scaling harness: compressed-serialized
         # ties deserialized at local[4] and beats it at local[16]
         # (BENCH/BASELINE.md round 5) — and at real-cluster RAM-per-core

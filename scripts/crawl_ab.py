@@ -32,28 +32,11 @@ CFG_OVERRIDES = {
     # bench waves are ~44.7k rows — just under the 50k early-commit engage
     # point; this variant asks whether the overlap pays there too
     "early30k": {"early_commit_min_batch": 30_000},
-    # round-6: synchronous wave commit (the pre-pipelining order) vs the
-    # pipelined default
-    "sync_commit": {"pipelined_commit": False},
-    # round-6 extension: synchronous select stats (eager checkpoint + sync
-    # agg) vs the overlapped lazy-materialization default
-    "sync_select": {"overlap_select_build": False},
-}
-
-# env-var overrides per variant (set before the engine builds its session /
-# enters the wave loop) — for A/B hooks that live in _static_planner
-ENV_OVERRIDES = {
-    # round-6: re-enable Catalyst constraint propagation in the wave loop
-    # (the OLD behavior) to measure the driver-analysis saving of the new
-    # default-off
-    "cprop_on": {"HELIX_KEEP_CONSTRAINT_PROP": "1"},
 }
 
 
 def run_variant(variant: str) -> float:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    for k, v in ENV_OVERRIDES.get(variant, {}).items():
-        os.environ[k] = v
     import bench
     from helix_spark.plans import crawl as crawlmod
 

@@ -76,7 +76,6 @@ def run_config(cpus: int) -> dict:
         report_buckets=64,
         salt_partitions=cpus,
         rank_buckets_per_core=int(os.environ.get("HELIX_RANK_BPC", "2")),
-        wave_checkpoint_storage=os.environ.get("HELIX_CKPT_STORAGE") or None,
     )
     eng = CrawlEngine(spark, cfg, tempfile.mkdtemp(prefix=f"scale{cpus}_"), pages, assets, robots)
     t_boot = time.time()

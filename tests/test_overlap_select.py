@@ -1,92 +1,37 @@
-"""Overlapped select materialization (CrawlConfig.overlap_select_build)
-equivalence.
+"""Overlapped select materialization against the serial oracle.
 
-The overlap replaces the select checkpoint's Observation with a wave-stats
-agg job that doubles as the lazy checkpoint's materializing action, run in
-a background thread while the driver builds the admit tree. These tests pin
-that it is a pure EXECUTION-ORDER change: every queryable artifact
-(crawl_log order, seen, report, resolved host_state, commit metrics) is
-identical between the overlapped and synchronous stats paths, including
-across politeness-delayed (empty-batch) waves.
+The wave's select+verify checkpoint is lazy; the wave-stats agg job that
+materializes it runs in a background thread while the driver builds the
+admit tree. These tests pin that the overlap is invisible — crawl order,
+seen and report equal SerialOracle's and the commit counters stay exact —
+including across politeness-delayed (empty-batch) waves.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from crawl_checks import assert_matches_oracle, engine
 from helix_spark.config import CrawlConfig
-from helix_spark.plans.crawl import CrawlEngine
 from helix_spark.sources import synthetic
 
 N, H = 45, 5
 
 
-def _cfg(**kw):
-    base = dict(
-        seeds=[f"http://host{h}.test/p/{h}" for h in range(2)],
-        per_host_budget=3,
-        max_waves=6,
-        expected_urls=5_000,
-        bloom_slices=4,
-        seen_buckets=8,
-        report_buckets=8,
-        salt_partitions=4,
-    )
-    base.update(kw)
-    return CrawlConfig(**base)
-
-
-def _run(spark, wh_dir, cfg, crawl_delay_hosts=()):
-    pages = spark.createDataFrame(synthetic.gen_pages_py(N, H))
-    assets = spark.createDataFrame(synthetic.gen_assets_py(N, H, n_images=16))
+@pytest.mark.parametrize("delays", [(), ("host1.test", "host3.test")])
+def test_overlap_matches_oracle(spark, tmp_path, delays):
     robots_pd = synthetic.gen_robots_py(H)
     # politeness delays force empty-batch waves through the overlap path
-    if crawl_delay_hosts:
-        robots_pd.loc[
-            robots_pd["host"].isin(list(crawl_delay_hosts)), "crawl_delay_waves"
-        ] = 3
-    robots = spark.createDataFrame(robots_pd)
-    eng = CrawlEngine(spark, cfg, str(wh_dir), pages, assets, robots)
-    out = eng.run()
-    return eng, out
-
-
-def _artifacts(eng):
-    order = [
-        (r["wave"], r["url"])
-        for r in eng.wh.read("crawl_log").orderBy("wave", "priority").collect()
-    ]
-    seen = {r["key"]: r["status_code"] for r in eng.read_seen().collect()}
-    report = {
-        r["verified_url"]: (r["status_code"], r["resource_type"])
-        for r in eng.read_report().collect()
-    }
-    hs = {
-        r["host"]: (r["next_allowed_wave"], r["cursor"])
-        for r in eng.read_host_state().collect()
-    }
-    head = eng.wh.head_commit()
-    metrics = {
-        k: head["metrics"].get(k) for k in ("counter", "live", "n_hosts")
-    }
-    return order, seen, report, hs, metrics
-
-
-@pytest.mark.parametrize("delays", [(), ("host1.test", "host3.test")])
-def test_overlap_equals_synchronous(spark, tmp_path, delays):
-    eng_o, out_o = _run(
-        spark, tmp_path / "wh_overlap",
-        _cfg(overlap_select_build=True), crawl_delay_hosts=delays,
+    robots_pd.loc[robots_pd["host"].isin(list(delays)), "crawl_delay_waves"] = 3
+    universe = (
+        synthetic.gen_pages_py(N, H),
+        synthetic.gen_assets_py(N, H, n_images=16),
+        robots_pd,
     )
-    eng_s, out_s = _run(
-        spark, tmp_path / "wh_sync",
-        _cfg(overlap_select_build=False), crawl_delay_hosts=delays,
+    cfg = CrawlConfig(
+        seeds=[f"http://host{h}.test/p/{h}" for h in range(2)],
+        per_host_budget=3, max_waves=6, expected_urls=5_000, bloom_slices=4,
+        seen_buckets=8, report_buckets=8, salt_partitions=4,
     )
-    assert (out_o.waves, out_o.aborted, out_o.total_fetched) == (
-        out_s.waves, out_s.aborted, out_s.total_fetched
-    )
-    for a, b, label in zip(
-        _artifacts(eng_o), _artifacts(eng_s),
-        ("order", "seen", "report", "host_state", "metrics"),
-    ):
-        assert a == b, f"overlap vs synchronous diverged on {label}"
+    eng = engine(spark, tmp_path / "wh", cfg, universe)
+    assert_matches_oracle(eng, eng.run(), cfg, universe)

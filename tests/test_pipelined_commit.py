@@ -1,18 +1,20 @@
-"""Pipelined wave commit (CrawlConfig.pipelined_commit) equivalence.
+"""Pipelined wave commit against the serial oracle.
 
-The pipelined order overlaps each wave's commit tail with the next wave's
-select; these tests pin that it is a pure EXECUTION-ORDER change: every
-queryable artifact (crawl_log order, seen, report, resolved host_state,
-commit metrics) is identical to the synchronous order, and the pending-
-manifest/delta reads survive a resume boundary.
+Each wave's commit tail (report/seen/metrics/crawl_log/bloom/host_state
+writes and the HEAD publish) overlaps the next wave's select; the next
+select reads the frontier through the pending manifest and host_state
+through the pending host-updates delta. These tests pin that the overlap is
+invisible: crawl order, seen and report equal SerialOracle's, the commit
+counters stay exact, the pending state does not leak across a mid-crawl
+resume boundary, and run() never returns with a wave in flight.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from crawl_checks import assert_head_exact, assert_matches_oracle, crawl_state, engine
 from helix_spark.config import CrawlConfig
-from helix_spark.plans.crawl import CrawlEngine
 from helix_spark.sources import synthetic
 
 N, H = 45, 5
@@ -33,92 +35,51 @@ def _cfg(**kw):
     return CrawlConfig(**base)
 
 
-def _run(spark, wh_dir, cfg):
-    pages = spark.createDataFrame(synthetic.gen_pages_py(N, H))
-    assets = spark.createDataFrame(synthetic.gen_assets_py(N, H, n_images=16))
-    robots = spark.createDataFrame(synthetic.gen_robots_py(H))
-    eng = CrawlEngine(spark, cfg, str(wh_dir), pages, assets, robots)
-    out = eng.run()
-    return eng, out
-
-
-def _artifacts(eng):
-    order = [
-        (r["wave"], r["url"])
-        for r in eng.wh.read("crawl_log").orderBy("wave", "priority").collect()
-    ]
-    seen = {r["key"]: r["status_code"] for r in eng.read_seen().collect()}
-    report = {
-        r["verified_url"]: (r["status_code"], r["resource_type"])
-        for r in eng.read_report().collect()
-    }
-    hs = {
-        r["host"]: (r["next_allowed_wave"], r["cursor"])
-        for r in eng.read_host_state().collect()
-    }
-    head = eng.wh.head_commit()
-    metrics = {
-        k: head["metrics"].get(k) for k in ("counter", "live", "n_hosts")
-    }
-    return order, seen, report, hs, metrics
+def _universe():
+    return (
+        synthetic.gen_pages_py(N, H),
+        synthetic.gen_assets_py(N, H, n_images=16),
+        synthetic.gen_robots_py(H),
+    )
 
 
 @pytest.fixture(scope="module")
-def both_runs(spark, tmp_path_factory):
-    tmp = tmp_path_factory.mktemp("pipelined_ab")
-    eng_p, out_p = _run(spark, tmp / "wh_pipelined", _cfg(pipelined_commit=True))
-    eng_s, out_s = _run(spark, tmp / "wh_sync", _cfg(pipelined_commit=False))
-    return (eng_p, out_p), (eng_s, out_s)
+def crawl(spark, tmp_path_factory):
+    universe, cfg = _universe(), _cfg()
+    eng = engine(spark, tmp_path_factory.mktemp("pipelined") / "wh", cfg, universe)
+    return eng, eng.run(), cfg, universe
 
 
-def test_pipelined_equals_synchronous(both_runs):
-    (eng_p, out_p), (eng_s, out_s) = both_runs
-    assert (out_p.waves, out_p.aborted, out_p.total_fetched) == (
-        out_s.waves, out_s.aborted, out_s.total_fetched
-    )
-    art_p, art_s = _artifacts(eng_p), _artifacts(eng_s)
-    for a, b, label in zip(
-        art_p, art_s, ("order", "seen", "report", "host_state", "metrics")
-    ):
-        assert a == b, f"pipelined vs synchronous diverged on {label}"
+def test_pipelined_matches_oracle(crawl):
+    eng, out, cfg, universe = crawl
+    assert_matches_oracle(eng, out, cfg, universe)
+    assert out.total_fetched == len(crawl_state(eng)[0])
 
 
-def test_pipelined_tail_joined_at_run_exit(both_runs):
+def test_pipelined_tail_joined_at_run_exit(crawl):
     """run() must never return with an unpublished wave in flight."""
-    (eng_p, _), _ = both_runs
-    assert eng_p._tail_future is None
-    assert eng_p._pending_frontier_m is None
-    assert eng_p._pending_hs_delta is None
+    eng = crawl[0]
+    assert eng._tail_future is None
+    assert eng._pending_frontier_m is None
+    assert eng._pending_hs_delta is None
 
 
-def test_pipelined_resume_is_noop_after_completion(spark, tmp_path):
-    cfg = _cfg(pipelined_commit=True)
-    eng, out = _run(spark, tmp_path / "wh", cfg)
-    pages = spark.createDataFrame(synthetic.gen_pages_py(N, H))
-    assets = spark.createDataFrame(synthetic.gen_assets_py(N, H, n_images=16))
-    robots = spark.createDataFrame(synthetic.gen_robots_py(H))
-    eng2 = CrawlEngine(spark, cfg, str(tmp_path / "wh"), pages, assets, robots)
-    out2 = eng2.run(resume=True)
-    assert out2.total_fetched == 0
+def test_pipelined_resume_is_noop_after_completion(spark, crawl):
+    eng, _, cfg, universe = crawl
+    eng2 = engine(spark, eng.wh.root, cfg, universe)
+    assert eng2.run(resume=True).total_fetched == 0
+    assert_head_exact(eng2)
 
 
-def test_pipelined_mid_crawl_resume_matches_sync(spark, tmp_path):
+def test_pipelined_mid_crawl_resume_matches_oracle(spark, tmp_path):
     """Stop after a budget-limited first run, resume with a fresh engine —
     the pending-manifest state must not leak across processes (it is
     in-memory only; resume starts from HEAD, which the tail published)."""
-    pages = spark.createDataFrame(synthetic.gen_pages_py(N, H))
-    assets = spark.createDataFrame(synthetic.gen_assets_py(N, H, n_images=16))
-    robots = spark.createDataFrame(synthetic.gen_robots_py(H))
-
-    def split_run(wh_dir, pipelined):
-        cfg1 = _cfg(pipelined_commit=pipelined, max_waves=3)
-        e1 = CrawlEngine(spark, cfg1, str(wh_dir), pages, assets, robots)
-        e1.run()
-        cfg2 = _cfg(pipelined_commit=pipelined, max_waves=6)
-        e2 = CrawlEngine(spark, cfg2, str(wh_dir), pages, assets, robots)
-        e2.run(resume=True)
-        return e2
-
-    e_p = split_run(tmp_path / "wh_p", True)
-    e_s = split_run(tmp_path / "wh_s", False)
-    assert _artifacts(e_p) == _artifacts(e_s)
+    universe = _universe()
+    e1 = engine(spark, tmp_path / "wh", _cfg(max_waves=3), universe)
+    e1.run()
+    assert_head_exact(e1)
+    cfg = _cfg(max_waves=6)
+    e2 = engine(spark, tmp_path / "wh", cfg, universe)
+    out = e2.run(resume=True)
+    assert_matches_oracle(e2, out, cfg, universe)
